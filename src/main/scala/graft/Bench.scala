@@ -48,7 +48,7 @@ object Bench {
     // local NVMe scratch for shuffle)
     val localDir = if (new java.io.File("/dev/shm").isDirectory)
       "/dev/shm/graft-spark-local" else System.getProperty("java.io.tmpdir")
-    val s = SparkSession.builder()
+    val s = sessions.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")
       .config("spark.local.dir", localDir)

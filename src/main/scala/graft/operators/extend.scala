@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.stage.implicits._
 
@@ -18,12 +18,16 @@ import graft.plans.stage.implicits._
  * hierarchy joins per side + a left-anti "seen" join + the scorer hop. The
  * accumulated set is stage.materialize'd every iteration to cut lineage
  * (50 self-join generations would otherwise blow up the plan), and the loop
- * exits early on an empty frontier (onto_extend.py:39).
+ * exits early on an empty frontier (onto_extend.py:39). That
+ * materialization is the round's only job: the frontier's emptiness is an
+ * `Observation` row count riding on it, not a separate `isEmpty` action.
  */
 object extend {
 
   /**
-   * @param seeds      (entity1, entity2, value) mappings; frontier0 = value>=kappa
+   * @param seeds      (entity1, entity2, value) mappings; frontier0 = value>=kappa.
+   *                   Read again every round (the seen set), so pass it
+   *                   materialized, as `Pipeline.run` does
    * @param srcEdges   (child_iri, parent_iri) for the entity1 side
    * @param tgtEdges   (child_iri, parent_iri) for the entity2 side
    * @param srcLabels  (id, label) normalized labels of side 1
@@ -37,14 +41,12 @@ object extend {
                      srcLabels: DataFrame, tgtLabels: DataFrame,
                      kappa: Double = 0.9, maxIter: Int = 50,
                      params: score.ScorerParams = score.ScorerParams()): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-
     val pairCols = Seq("entity1", "entity2")
+    // lazy projections over the (materialized) seeds
     var seen = seeds.select(pairCols.map(col): _*).distinct()
-      .materialize
-    var frontier = seeds.filter(col("value") >= kappa)
-      .select(pairCols.map(col): _*).distinct()
-      .materialize
+    val seedFrontier = seeds.filter(col("value") >= kappa)
+    var frontier = seedFrontier.select(pairCols.map(col): _*).distinct()
+    var frontierNonEmpty = !seedFrontier.isEmpty
     // accumulate checkpointed per-iteration outputs; union lazily (one
     // materialization per iteration — `kept` — instead of four)
     val expansionParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -55,7 +57,7 @@ object extend {
     val tgtUp = tgtEdges.select(col("child_iri").as("entity2"), col("parent_iri").as("n2"))
     val tgtDown = tgtEdges.select(col("parent_iri").as("entity2"), col("child_iri").as("n2"))
 
-    while (iter < maxIter && !frontier.isEmpty) {
+    while (iter < maxIter && frontierNonEmpty) {
       // one_hob_extend (onto_extend.py:55-76): parents×parents ∪ children×children
       val up = frontier.join(srcUp, "entity1").join(tgtUp, "entity2")
       val down = frontier.join(srcDown, "entity1").join(tgtDown, "entity2")
@@ -78,8 +80,10 @@ object extend {
         .agg(greatest(avg(col("pair_score")),
           max(when(col("l1") === col("l2"), 1.0).otherwise(0.0))).as("value"))
         .select(col("from_id").as("entity1"), col("to_id").as("entity2"), col("value"))
+      val keptRows = Observation()
       val kept = scored.filter(col("value") >= kappa)
-        .materialize // the ONE materialization per iteration
+        .observe(keptRows, count(lit(1)).as("n"))
+        .materialize // the ONE materialization (and job) per iteration
 
       expansionParts += kept
       // lazy unions over checkpointed parts: lineage depth = #iterations,
@@ -87,6 +91,7 @@ object extend {
       // materialized leaves are cheap to analyze)
       seen = seen.unionByName(kept.select(pairCols.map(col): _*))
       frontier = kept.select(pairCols.map(col): _*)
+      frontierNonEmpty = keptRows.get("n").asInstanceOf[Long] > 0
       iter += 1
     }
 

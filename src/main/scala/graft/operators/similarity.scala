@@ -112,18 +112,31 @@ object similarity {
       .drop("_vn", "_sims")
   }
 
+  /** Whether ids of type `dt` survive the literal paths' cast to long
+    * exactly: integral types only (the `canonical.localLt` pattern). A
+    * string or fractional id would come back as 0L or truncated. */
+  private def integralId(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+  }
+
   /** Collect a centroid table to the driver, sorted by ascending cell id:
-    * Some(cell ids as longs, matrix) — or None when the table exceeds
-    * `maxLiteralCentroids` (the `limit` bounds the probe itself, so an
-    * over-bound table costs max+1 rows, never an OOM) and the caller
-    * should take the broadcast path instead. The within-bound collect is
-    * the same driver-memory cost the broadcast already paid. */
+    * Some(cell ids as longs, matrix) — or None when the caller should take
+    * the broadcast path instead: the table exceeds `maxLiteralCentroids`
+    * (the `limit` bounds the probe itself, so an over-bound table costs
+    * max+1 rows, never an OOM), or its cell ids are not integral or hold a
+    * null (a long read would turn them into 0L). The within-bound collect
+    * is the same driver-memory cost the broadcast already paid. */
   private def collectCentroids(centroids: DataFrame)
       : Option[(Seq[Long], Seq[Seq[Double]])] = {
+    if (!integralId(centroids.schema("cell").dataType)) return None
     val rows = centroids
       .select(col("cell").cast("long").as("cell"), toDoubleArray(col("cvec")).as("cv"))
       .limit(maxLiteralCentroids + 1).collect()
-    if (rows.length > maxLiteralCentroids) return None
+    if (rows.length > maxLiteralCentroids || rows.exists(_.isNullAt(0))) return None
     val sorted = rows.sortBy(_.getLong(0))
     Some((sorted.toSeq.map(_.getLong(0)), sorted.toSeq.map(_.getSeq[Double](1))))
   }
@@ -366,16 +379,18 @@ object similarity {
     // jobs back-fill the executors the others leave idle (guide §2.6).
     // Each fit is deterministic on its own slice; the union order is the
     // subspace order, unchanged.
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    (0 until m).map { s => Future {
+    // blocking { }: each fit waits on Spark jobs, so the shared pool may
+    // add a thread instead of starving other futures
+    (0 until m).map { s => Future(blocking {
       val sub = vectors.select(col(idCol).as("id"),
         slice(col(vecCol), s * subDim + 1, subDim).as("sv"))
       fitCentroidsForIvf(kmeansFit(sub, "id", "sv", k, iters, maxFitRows,
           preCountedRows = Some(nFit)))
         .select(lit(s).as("subspace"), col("cell"), col("cvec"))
-    } }.map(Await.result(_, Duration.Inf)).reduce(_ union _)
+    }) }.map(Await.result(_, Duration.Inf)).reduce(_ union _)
   }
 
   /**
@@ -403,13 +418,19 @@ object similarity {
     // nearestIdxExpr over ascending-cell matrices — bit-identical codes
     // (q65/q66 oracles).
     val cellType = codebooks.schema("cell").dataType
+    // non-integral or null subspace/cell ids would read back as 0 from the
+    // int/long casts below: those codebooks take the broadcast plan, which
+    // keeps the ids as they are
+    if (!integralId(codebooks.schema("subspace").dataType) || !integralId(cellType))
+      return pqEncodeBroadcast(vectors, codebooks, idCol, vecCol, m, subDim)
     val cbRows = codebooks
       .select(col("subspace").cast("int").as("s"), col("cell").cast("long").as("cell"),
         toDoubleArray(col("cvec")).as("cv"))
       .limit(maxLiteralCentroids + 1).collect()
     // codebooks past the literal bound (large m·k configurations) keep the
     // pre-r7 broadcast-join + window shape — slower but any-size-safe
-    if (cbRows.length > maxLiteralCentroids)
+    if (cbRows.length > maxLiteralCentroids ||
+        cbRows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
       return pqEncodeBroadcast(vectors, codebooks, idCol, vecCol, m, subDim)
     val v = vectors.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
     val bySub = cbRows.groupBy(_.getInt(0))

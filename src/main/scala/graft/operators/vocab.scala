@@ -27,6 +27,12 @@ import graft.functions.text
  */
 object vocab {
 
+  /** `learnMerges`' defaults, shared with `Pipeline.induceCatalogVocab`'s
+    * own bounded collect so the two routes cannot drift apart: the
+    * driver-local trainer's distinct-word guard and the merge floor. */
+  val defaultMaxLocalHistWords = 1000000L
+  val defaultMinCount = 2L
+
   /** A word as its initial WordPiece symbol sequence: first char plain,
     * continuations "##"-prefixed. */
   def initSymbols(w: String): Seq[String] =
@@ -204,8 +210,8 @@ object vocab {
    * transcript table (`wordHistogram` is the only corpus-proportional job).
    */
   def learnMerges(spark: SparkSession, hist: DataFrame, nMerges: Int,
-                  minCount: Long = 2L,
-                  maxLocalHistWords: Long = 1000000L): DataFrame = {
+                  minCount: Long = defaultMinCount,
+                  maxLocalHistWords: Long = defaultMaxLocalHistWords): DataFrame = {
     import spark.implicits._
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     // r7: ONE bounded limit(guard+1).collect() replaces the count job +

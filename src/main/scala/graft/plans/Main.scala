@@ -28,7 +28,7 @@ object Main {
     val workDir = args.lift(2).getOrElse("/tmp/graft-work")
 
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val builder0 = SparkSession.builder().appName("graft-kg-construct")
+    val builder0 = graft.sessions.builder().appName("graft-kg-construct")
     // spark-submit injects spark.master; standalone sbt runs default local
     val spark = (if (sys.props.contains("spark.master") || preexisting.nonEmpty) builder0
       else builder0.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))

@@ -176,15 +176,16 @@ object Pipeline {
     // each direction is an independent ~40-operator DAG whose Catalyst
     // analysis/optimization is serial driver CPU (~2s each measured);
     // plan + materialize them on concurrent threads
-    import scala.concurrent.{Await, Future}
+    // (blocking: each waits on Spark jobs inside the shared pool)
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val s2tF = Future(align.orient(
+    val s2tF = Future(blocking(align.orient(
       alignOneSide(spark, srcLabels, tgtLabels, srcPost, tgtPost, dTgt, p),
-      fromIsSrc = true).materialize)
-    val t2sF = Future(align.orient(
+      fromIsSrc = true).materialize))
+    val t2sF = Future(blocking(align.orient(
       alignOneSide(spark, tgtLabels, srcLabels, tgtPost, srcPost, dSrc, p),
-      fromIsSrc = false).materialize)
+      fromIsSrc = false).materialize))
     align.combine(Await.result(s2tF, Duration.Inf), Await.result(t2sF, Duration.Inf))
   }
 
@@ -198,7 +199,7 @@ object Pipeline {
   def run(spark: SparkSession, turns: Dataset[Turn], classes: Dataset[ClassText],
           edges: Dataset[Edge], p: Params = Params(),
           precomputedRaw: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val phaseLog = sys.env.contains("SPARK_GRAFT_PHASE_LOG")
@@ -211,7 +212,7 @@ object Pipeline {
     // submit it concurrently so the alignment chain's many small jobs hide
     // behind the big scan instead of serializing after it. On a cluster
     // these are two independent stage DAGs the scheduler runs side by side.
-    val mensF = Future {
+    val mensF = Future(blocking { // its collect is a Spark job
       val dictDs = classes.filter(col("onto") === "src")
       require(Seq("auto", "trie", "join").contains(p.linker),
         s"linker must be auto|trie|join, got ${p.linker}")
@@ -257,7 +258,7 @@ object Pipeline {
       // DAG exactly once instead.
       mark("mentions planned")
       m
-    }
+    })
 
     // catalog sides are dimension tables: cache once, reused ~6 times
     val srcLabels = sideLabels(classes, "src").cache()
@@ -343,13 +344,13 @@ object Pipeline {
     // base piece set then derive from the same rows. Histograms past the
     // guard keep the original distributed path — identical semantics,
     // identical result (the vocab is a pure function of the histogram).
-    val guard = 1000000L
+    val guard = vocab.defaultMaxLocalHistWords
     import spark.implicits._
     val rows = hist.select(col("word").cast("string"), col("cnt").cast("long"))
       .limit(math.min(guard + 1, Int.MaxValue.toLong).toInt)
       .as[(String, Long)].collect()
     if (rows.length <= guard) {
-      val merges = vocab.learnMergesLocal(rows, nMerges, 2L)
+      val merges = vocab.learnMergesLocal(rows, nMerges, vocab.defaultMinCount)
       val base = rows.iterator.flatMap(r => vocab.initSymbols(r._1)).toSet
       base ++ merges.map(_._4)
     } else {

@@ -148,6 +148,54 @@ class DedupSimSpec extends SparkSuite {
     assert(lit == bc && lit.size == 8)
   }
 
+  test("assignCells keeps non-integral and null cell ids (no silent 0L)") {
+    val vecs = Seq(
+      (1L, Seq(1.0f, 0.0f)), (2L, Seq(0.1f, 0.9f)), (3L, Seq(0.0f, 1.0f))
+    ).toDF("vid", "vec")
+    def same(centroids: org.apache.spark.sql.DataFrame): Set[(Long, String)] = {
+      val got = similarity.assignCells(vecs, centroids, "vid", "vec")
+        .select($"id", $"cell".cast("string")).as[(Long, String)].collect().toSet
+      val want = similarity.assignCellsBroadcast(vecs, centroids, "vid", "vec")
+        .select($"id", $"cell".cast("string")).as[(Long, String)].collect().toSet
+      assert(got == want)
+      got
+    }
+    val strCells = Seq(("x", Seq(1.0f, 0.0f)), ("y", Seq(0.0f, 1.0f))).toDF("cell", "cvec")
+    assert(same(strCells) == Set((1L, "x"), (2L, "y"), (3L, "y")))
+    val fracCells = Seq((0.5, Seq(1.0f, 0.0f)), (1.5, Seq(0.0f, 1.0f))).toDF("cell", "cvec")
+    assert(same(fracCells) == Set((1L, "0.5"), (2L, "1.5"), (3L, "1.5")))
+    val nullCell = Seq((Some(7L), Seq(1.0f, 0.0f)), (None, Seq(0.0f, 1.0f)))
+      .toDF("cell", "cvec")
+    assert(same(nullCell) == Set((1L, "7"), (2L, null), (3L, null)))
+  }
+
+  test("pqEncode keeps non-integral and null code ids (no silent 0)") {
+    val vecs = Seq(
+      (1L, Seq(1.0f, 0.0f, 0.0f, 1.0f)), (2L, Seq(0.0f, 1.0f, 1.0f, 0.0f))
+    ).toDF("vid", "vec")
+    def same(cb: org.apache.spark.sql.DataFrame): Set[(Long, Int, String)] = {
+      def norm(df: org.apache.spark.sql.DataFrame) =
+        df.select($"id", $"subspace".cast("int"), $"code".cast("string"))
+          .as[(Long, Int, String)].collect().toSet
+      val got = norm(similarity.pqEncode(vecs, cb, "vid", "vec", 2, 2))
+      assert(got == norm(similarity.pqEncodeBroadcast(vecs, cb, "vid", "vec", 2, 2)))
+      got
+    }
+    val strCodes = Seq(
+      (0, "a", Seq(1.0f, 0.0f)), (0, "b", Seq(0.0f, 1.0f)),
+      (1, "c", Seq(1.0f, 0.0f)), (1, "d", Seq(0.0f, 1.0f))).toDF("subspace", "cell", "cvec")
+    assert(same(strCodes) == Set((1L, 0, "a"), (1L, 1, "d"), (2L, 0, "b"), (2L, 1, "c")))
+    val nullCode = Seq(
+      (0, Some(3L), Seq(1.0f, 0.0f)), (0, None, Seq(0.0f, 1.0f)),
+      (1, Some(5L), Seq(1.0f, 0.0f)), (1, Some(6L), Seq(0.0f, 1.0f))).toDF("subspace", "cell", "cvec")
+    assert(same(nullCode) == Set((1L, 0, "3"), (1L, 1, "6"), (2L, 0, null), (2L, 1, "5")))
+    // a null subspace matches no subspace (the join semantics), not subspace 0
+    val nullSub = Seq(
+      (Some(0), 3L, Seq(1.0f, 0.0f)), (Some(0), 4L, Seq(0.0f, 1.0f)), (None, 1L, Seq(0.0f, 1.0f)),
+      (Some(1), 5L, Seq(1.0f, 0.0f)), (Some(1), 6L, Seq(0.0f, 1.0f))).toDF("subspace", "cell", "cvec")
+    assert(same(nullSub) == Set((1L, 0, "3"), (1L, 1, "6"), (2L, 0, "4"), (2L, 1, "5")))
+  }
+
   test("ivfTopK probes nearest cells and matches brute force on clean clusters") {
     val vecs = Seq(
       (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.95f, 0.05f)), (2L, Seq(0.9f, 0.1f)),

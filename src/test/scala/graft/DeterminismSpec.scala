@@ -10,7 +10,7 @@ import graft.sources.fixtures
 class DeterminismSpec extends AnyFunSuite {
 
   private def withPartitions[A](n: Int)(f: SparkSession => A): A = {
-    val spark = SparkSession.builder().master("local[4]")
+    val spark = sessions.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")

@@ -43,6 +43,70 @@ class ExtendRepairSpec extends SparkSuite {
     assert(out.filter($"value" < 0.9).count() == 0)
   }
 
+  /** A `depth`-deep parent chain on both sides with identical labels per
+    * level: every 1-hop child pair is an exact label match (score 1.0). */
+  private def chains(depth: Int) = {
+    val sE = (0 until depth).map(i => (s"s${i + 1}", s"s$i")).toDF("child_iri", "parent_iri")
+    val tE = (0 until depth).map(i => (s"t${i + 1}", s"t$i")).toDF("child_iri", "parent_iri")
+    val sL = (0 to depth).map(i => (s"s$i", s"node $i")).toDF("id", "label")
+    val tL = (0 to depth).map(i => (s"t$i", s"node $i")).toDF("id", "label")
+    (sE, tE, sL, tL)
+  }
+
+  /** Rounds an expansion took: one materialized part per round. */
+  private def rounds(out: org.apache.spark.sql.DataFrame): Int =
+    out.queryExecution.logical match {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u.children.size
+      case _: org.apache.spark.sql.execution.LogicalRDD => 1
+      case _ => 0
+    }
+
+  /** Runs `f` once per `spark.graft.materialize` mode. */
+  private def inBothModes(f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-extend-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try Seq("local", "reliable").foreach { mode =>
+      spark.conf.set("spark.graft.materialize", mode)
+      f(mode)
+    } finally spark.conf.unset("spark.graft.materialize")
+  }
+
+  test("multi-round extension descends one level per round, in both materialize modes") {
+    val (sE, tE, sL, tL) = chains(3)
+    val seeds = Seq(("s0", "t0", 1.0)).toDF("entity1", "entity2", "value")
+    inBothModes { mode =>
+      val out = extend.extendMappings(spark, seeds, sE, tE, sL, tL,
+        kappa = 0.9, maxIter = 10)
+      assert(out.as[(String, String, Double)].collect().toSet ==
+        Set(("s1", "t1", 1.0), ("s2", "t2", 1.0), ("s3", "t3", 1.0)), mode)
+      // three productive rounds, then the round that finds nothing new
+      assert(rounds(out) == 4, mode)
+    }
+  }
+
+  test("a round that keeps nothing empties the frontier and ends the loop, in both modes") {
+    // the seed pair has no hierarchy neighbours: round 1 finds no candidates
+    val seeds = Seq(("z1", "z2", 0.95)).toDF("entity1", "entity2", "value")
+    inBothModes { mode =>
+      val out = extend.extendMappings(spark, seeds, srcEdges, tgtEdges,
+        srcLabels, tgtLabels, kappa = 0.9, maxIter = 10)
+      assert(out.columns.toSeq == Seq("entity1", "entity2", "value"), mode)
+      assert(out.count() == 0 && rounds(out) == 1, mode)
+    }
+  }
+
+  test("maxIter caps the rounds with the frontier still non-empty, in both modes") {
+    val (sE, tE, sL, tL) = chains(5)
+    val seeds = Seq(("s0", "t0", 1.0)).toDF("entity1", "entity2", "value")
+    inBothModes { mode =>
+      val out = extend.extendMappings(spark, seeds, sE, tE, sL, tL,
+        kappa = 0.9, maxIter = 2)
+      assert(out.as[(String, String, Double)].collect().toSet ==
+        Set(("s1", "t1", 1.0), ("s2", "t2", 1.0)), mode)
+      assert(rounds(out) == 2, mode)
+    }
+  }
+
   test("oneToOne: best mapping per entity per side, deterministic ties") {
     val m = Seq(
       ("s1", "t1", 0.9), ("s1", "t2", 0.8), // s1 keeps t1
@@ -80,10 +144,7 @@ class ExtendRepairSpec extends SparkSuite {
     // analysis alone would take minutes and the plan tree would be
     // thousands of nodes deep.
     val n = 50
-    val sE = (0 until n).map(i => (s"s${i + 1}", s"s$i")).toDF("child_iri", "parent_iri")
-    val tE = (0 until n).map(i => (s"t${i + 1}", s"t$i")).toDF("child_iri", "parent_iri")
-    val sL = (0 to n).map(i => (s"s$i", s"node $i")).toDF("id", "label")
-    val tL = (0 to n).map(i => (s"t$i", s"node $i")).toDF("id", "label")
+    val (sE, tE, sL, tL) = chains(n)
     // seed at the TOP of both chains; each iteration descends one level
     // (child x child of the frontier), so level i arrives at iteration i
     val seeds = Seq(("s0", "t0", 1.0)).toDF("entity1", "entity2", "value")

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate → one JVM-wide). */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = sessions.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
